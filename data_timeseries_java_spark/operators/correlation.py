@@ -61,6 +61,19 @@ def _windowed(returns: DataFrame, config: CorrelationConfig) -> DataFrame:
     )
 
 
+def _pair_join(w: DataFrame) -> DataFrame:
+    """Self-join of windowed returns on (window, time): one row per
+    unordered key pair (``a.key < b.key``) and aligned time, sides
+    addressable as ``a.*`` / ``b.*``."""
+    a, b = w.alias("a"), w.alias("b")
+    return a.join(
+        b,
+        (F.col("a.w") == F.col("b.w"))
+        & (F.col("a.time") == F.col("b.time"))
+        & (F.col("a.key") < F.col("b.key")),
+    )
+
+
 def pairwise_correlations(returns: DataFrame,
                           config: CorrelationConfig | None = None,
                           cache_input: bool = True) -> DataFrame:
@@ -86,13 +99,7 @@ def pairwise_correlations(returns: DataFrame,
     """
     cfg = config or CorrelationConfig()
     w = materialize(_windowed(returns, cfg), cache_input)
-    a, b = w.alias("a"), w.alias("b")
-    joined = a.join(
-        b,
-        (F.col("a.w") == F.col("b.w"))
-        & (F.col("a.time") == F.col("b.time"))
-        & (F.col("a.key") < F.col("b.key")),
-    )
+    joined = _pair_join(w)
     aggs = [
         safe_corr(F.col("a.value"), F.col("b.value")).alias("r"),
         F.count(F.lit(1)).cast("int").alias("n"),
@@ -320,13 +327,7 @@ def pairwise_regression(returns: DataFrame,
     """
     cfg = config or CorrelationConfig()
     w = materialize(_windowed(returns, cfg), cache_input)
-    a, b = w.alias("a"), w.alias("b")
-    joined = a.join(
-        b,
-        (F.col("a.w") == F.col("b.w"))
-        & (F.col("a.time") == F.col("b.time"))
-        & (F.col("a.key") < F.col("b.key")),
-    )
+    joined = _pair_join(w)
     g = joined.groupBy(
         F.col("a.w").alias("w"),
         F.col("a.key").alias("key1"),
@@ -425,13 +426,7 @@ def pairwise_correlations_exact(returns: DataFrame,
 
     cfg = config or CorrelationConfig()
     w = _windowed(returns, cfg)
-    a, b = w.alias("a"), w.alias("b")
-    joined = a.join(
-        b,
-        (F.col("a.w") == F.col("b.w"))
-        & (F.col("a.time") == F.col("b.time"))
-        & (F.col("a.key") < F.col("b.key")),
-    ).select(
+    joined = _pair_join(w).select(
         F.col("a.w.start").alias("window_start"),
         F.col("a.w.end").alias("window_end"),
         F.col("a.key").alias("key1"),

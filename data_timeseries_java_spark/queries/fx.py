@@ -318,7 +318,7 @@ def q_fx_candles_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     import time as _time
 
     from data_timeseries_java_spark.streaming.candles_stream import (
-        streaming_complete_candles_global,
+        streaming_complete_candles,
     )
     from data_timeseries_java_spark.streaming.replay import (
         SENTINEL_KEY,
@@ -356,7 +356,7 @@ def q_fx_candles_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         src = (spark.readStream.schema(ticks.schema)
                .option("maxFilesPerTrigger", 1).parquet(f"{work}/in/f*"))
-        candles = streaming_complete_candles_global(src, universe, RES)
+        candles = streaming_complete_candles(src, universe, RES)
         sink = run_to_parquet_sink(candles, f"{work}/out", f"{work}/ckpt")
         shutil.rmtree(f"{work}/in", ignore_errors=True)
         shutil.rmtree(f"{work}/ckpt", ignore_errors=True)
@@ -1993,7 +1993,7 @@ def q_recovery_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     import time as _time
 
     from data_timeseries_java_spark.streaming.candles_stream import (
-        streaming_complete_candles_global,
+        streaming_complete_candles,
     )
     from data_timeseries_java_spark.streaming.replay import (
         SENTINEL_KEY,
@@ -2041,8 +2041,8 @@ def q_recovery_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the window straddling the restart boundary — found by this
         # gate; delay >= resolution keeps every in-window tick inside
         # the restart-tightened horizon
-        candles1 = streaming_complete_candles_global(src(), universe, RES,
-                                                     watermark=RES)
+        candles1 = streaming_complete_candles(src(), universe, RES,
+                                              watermark=RES)
         run_to_parquet_sink(candles1, f"{work}/out", f"{work}/ckpt")
 
         # phase 2: the rest of the feed + the flush sentinel appear,
@@ -2061,8 +2061,8 @@ def q_recovery_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(True).alias("is_live"))
         write_sentinel_file(sent, f"{work}/in", n_files, base)
 
-        candles2 = streaming_complete_candles_global(src(), universe, RES,
-                                                     watermark=RES)
+        candles2 = streaming_complete_candles(src(), universe, RES,
+                                              watermark=RES)
         sink = run_to_parquet_sink(candles2, f"{work}/out", f"{work}/ckpt")
         shutil.rmtree(f"{work}/in", ignore_errors=True)
         shutil.rmtree(f"{work}/ckpt", ignore_errors=True)
@@ -4803,7 +4803,7 @@ def q_late_data_state_stream_replay(spark: SparkSession,
     import time as _time
 
     from data_timeseries_java_spark.streaming.candles_stream import (
-        streaming_complete_candles_global,
+        streaming_complete_candles,
     )
     from data_timeseries_java_spark.streaming.replay import (
         SENTINEL_KEY,
@@ -4843,7 +4843,7 @@ def q_late_data_state_stream_replay(spark: SparkSession,
 
         src = (spark.readStream.schema(ticks.schema)
                .option("maxFilesPerTrigger", 1).parquet(f"{work}/in/f*"))
-        candles = streaming_complete_candles_global(src, universe, RES)
+        candles = streaming_complete_candles(src, universe, RES)
         sink = run_to_parquet_sink(candles, f"{work}/out", f"{work}/ckpt")
         shutil.rmtree(f"{work}/in", ignore_errors=True)
         shutil.rmtree(f"{work}/ckpt", ignore_errors=True)

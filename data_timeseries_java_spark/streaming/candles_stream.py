@@ -5,35 +5,30 @@ Streaming equivalents of ``operators/candles.py`` (W1+A3 / A1+A2+A4 /
 W3, SURVEY.md §2.2-2.3):
 
 - :func:`streaming_ohlc_candles` — watermarked fixed-window aggregation,
-  identical aggregation expressions to the batch operator; Spark runs
+  the same aggregation expressions as the batch operator; Spark runs
   the same logical plan incrementally against a state store. The
   watermark replaces the reference's no-late-data stance with an
   explicit policy: rows later than the watermark are dropped; candles
   finalize (append mode) once the watermark passes window end.
 
-- :func:`streaming_complete_candles` — ONE ``applyInPandasWithState``
-  operator over raw ticks that owns the whole candle lifecycle per
-  instrument: partial-candle accumulation for open windows, window
-  finalization at the watermark, interior gap-window synthesis, and
-  carry-forward close→open. Spark disallows a second stateful operator
-  after a streaming aggregation in append mode, and the reference's
-  accumulating-panes trick (``CompleteTimeSeriesAggCombiner.java:47-227``)
-  is precisely "keyed state across windows" — so the state store is the
-  honest home for all of it. State per key: the open windows' partial
-  candles + the last emitted close; O(keys x open windows), a few
-  hundred bytes per instrument.
+- :func:`streaming_complete_candles` — window-activity markers fanned
+  out over the instrument universe, then ONE ``applyInPandasWithState``
+  operator that owns the whole candle lifecycle per instrument:
+  partial-candle accumulation for open windows, window finalization at
+  the watermark, gap candles for the windows a key missed, and
+  carry-forward close→open. The reference needs accumulating panes
+  (``CompleteTimeSeriesAggCombiner.java:47-227``) only because Dataflow
+  1.9 had no keyed state; here the state store is that keyed state.
+  State per key: the open windows' partial candles + the last emitted
+  close; O(keys x open windows), a few hundred bytes per instrument.
 
 Semantics notes (all test-asserted):
-- :func:`streaming_complete_candles` (per-key mode) synthesizes gap
-  candles for INTERIOR missing windows of each key only; leading/
-  trailing gaps need cross-key knowledge. For dense feeds (every
-  instrument live in the first and last window) it matches batch.
-- :func:`streaming_complete_candles_global` closes that divergence:
-  window-activity marker rows (stateless fan-out over the instrument
-  universe) give every key the reference's GLOBAL missing-key view
-  (``DetectMissingTimeSeriesValuesCombiner.java:36-84``), so leading
-  0.0-price gaps and trailing carry-forward gaps match the batch
-  operator exactly — and globally-empty windows emit nothing.
+- Output equals the batch pipeline (``candles_pipeline``) on the same
+  ticks: a key gets a gap candle for exactly the windows in which some
+  instrument ticked and it did not (leading gaps carry 0.0 prices,
+  later ones the last close); windows no instrument ticked in emit
+  nothing. A window's close is its latest tick; a same-millisecond tie
+  goes to the higher bid, then the higher ask, as in batch.
 - min/max in the flat streaming output carry prices only (the batch
   operator keeps whole ticks; the flat schema is what sinks want).
 - RESTART tightens the disorder horizon by one batch: in-run, Spark
@@ -53,6 +48,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from data_timeseries_java_spark.operators.candles import _ohlc_aggs
 
 CANDLE_OUT_SCHEMA = (
     "key string, window_start timestamp, window_end timestamp, "
@@ -87,15 +84,7 @@ def streaming_ohlc_candles(ticks: DataFrame, resolution: str = "120 seconds",
           .select("key", F.window("event_time", resolution).alias("w"),
                   tick.alias("tick"), "bid", "ask", "is_live",
                   t_ms.alias("t_ms")))
-    agg = df.groupBy("key", "w").agg(
-        F.min(F.struct(F.col("ask"), F.col("t_ms"), F.col("tick"))).alias("mna"),
-        F.max(F.struct(F.col("ask"), (-F.col("t_ms")).alias("n"), F.col("tick"))).alias("mxa"),
-        F.min(F.struct(F.col("bid"), F.col("t_ms"), F.col("tick"))).alias("mnb"),
-        F.max(F.struct(F.col("bid"), (-F.col("t_ms")).alias("n"), F.col("tick"))).alias("mxb"),
-        F.max(F.struct(F.col("t_ms"), F.col("is_live").cast("int").alias("l"),
-                       F.col("tick"))).alias("cl"),
-        F.max("is_live").alias("is_live"),
-    )
+    agg = df.groupBy("key", "w").agg(*_ohlc_aggs())
     return agg.select(
         "key",
         F.col("w.start").alias("window_start"),
@@ -125,24 +114,34 @@ def _resolution_ms(resolution: str) -> int:
             f"(singular or plural)") from e
 
 
-def streaming_complete_candles(ticks: DataFrame,
+def streaming_complete_candles(ticks: DataFrame, universe: list[str],
                                resolution: str = "120 seconds",
-                               watermark: str = "0 seconds",
-                               interior_gaps: bool = True) -> DataFrame:
-    """Complete candles (gap-filled interior windows + carry-forward) as a
-    single keyed stateful operator over raw ticks.
+                               watermark: str = "0 seconds") -> DataFrame:
+    """Complete candles (gap-filled + carry-forward) as one keyed
+    stateful operator over raw ticks, with the batch pipeline's global
+    gap-fill: a key absent from a window gets a gap candle whenever any
+    OTHER instrument ticked there — before the key's first tick
+    (0.0-price gap candles, matching batch ``gap_fill``) and after it
+    (carry-forward gap candles). Windows no instrument ticked in emit
+    nothing.
 
-    ``interior_gaps=True`` (per-key mode): windows a key skips between
-    two of its own ticks are synthesized as gap candles — correct when
-    every window is globally active (dense feeds). The global variant
-    (:func:`streaming_complete_candles_global`) passes False: window
-    activity arrives as marker rows, so fabricating skipped windows
-    would wrongly emit candles for windows NO instrument ticked in
-    (batch emits nothing there)."""
+    ``universe`` is the instrument universe (the reference's work-packet
+    config constant, S3) — a static list of keys, mirroring the batch
+    operator's broadcast ``instruments`` frame. A key outside it still
+    gets candles for the windows it ticked in, but no gap candles.
+
+    Shape: tick stream → window-activity markers fan-out (stateless,
+    candle-sized) → union → one keyed stateful operator; one shuffle on
+    key.
+    """
     import pandas as pd
 
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+    if isinstance(universe, str):
+        raise TypeError(
+            f"universe must be a list of instrument keys, not the string "
+            f"{universe!r}; resolution is the third argument")
     res_ms = _resolution_ms(resolution)
 
     def process(key, pdf_iter, state: GroupState):
@@ -161,39 +160,38 @@ def streaming_complete_candles(ticks: DataFrame,
             open_w = {}
 
         # 1. fold this batch's rows into open-window partial candles.
-        #    Marker rows (is_marker=True, from the global window-activity
-        #    fan-out) only OPEN a window — a window that stays marker-only
-        #    finalizes as a gap candle; a real tick upgrades it to live.
+        #    Marker rows only OPEN a window — a window that stays
+        #    marker-only finalizes as a gap candle; a real tick upgrades
+        #    it to live.
         for pdf in pdf_iter:
             t_ms = (pdf["event_time"].astype("datetime64[ns]").astype("int64")
                     // 1_000_000).to_numpy()
             bids = pdf["bid"].to_numpy()
             asks = pdf["ask"].to_numpy()
-            marks = (pdf["is_marker"].to_numpy()
-                     if "is_marker" in pdf.columns else None)
+            marks = pdf["is_marker"].to_numpy()
             for i in range(len(pdf)):
                 w = int(t_ms[i]) // res_ms * res_ms
                 if next_w is not None and w < next_w:
                     continue  # window already finalized (late within horizon)
                 c = open_w.get(w)
-                if marks is not None and marks[i]:
+                if marks[i]:
                     if c is None:
                         open_w[w] = [None, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, False]
                     continue
+                t, bid, ask = int(t_ms[i]), float(bids[i]), float(asks[i])
                 if c is None or not c[7]:
-                    open_w[w] = [int(t_ms[i]), float(bids[i]), float(asks[i]),
-                                 float(asks[i]), float(asks[i]),
-                                 float(bids[i]), float(bids[i]), True]
+                    open_w[w] = [t, bid, ask, ask, ask, bid, bid, True]
                 else:
-                    if t_ms[i] > c[0]:
-                        c[0], c[1], c[2] = int(t_ms[i]), float(bids[i]), float(asks[i])
-                    c[3] = min(c[3], float(asks[i]))
-                    c[4] = max(c[4], float(asks[i]))
-                    c[5] = min(c[5], float(bids[i]))
-                    c[6] = max(c[6], float(bids[i]))
+                    # the latest tick closes; a same-millisecond tie goes
+                    # to the higher bid, then ask (batch's max(struct))
+                    if (t, bid, ask) > (c[0], c[1], c[2]):
+                        c[0], c[1], c[2] = t, bid, ask
+                    c[3] = min(c[3], ask)
+                    c[4] = max(c[4], ask)
+                    c[5] = min(c[5], bid)
+                    c[6] = max(c[6], bid)
 
-        # 2. finalize windows passed by the watermark, oldest first,
-        #    synthesizing interior gap candles for skipped windows
+        # 2. finalize windows passed by the watermark, oldest first
         wm = state.getCurrentWatermarkMs()
         out = []
 
@@ -208,34 +206,19 @@ def streaming_complete_candles(ticks: DataFrame,
             next_w = w + res_ms
             last_time, last_bid, last_ask = ct, cb, ca
 
-        def emit_gap(w):
-            gt = w + res_ms - 1
-            if last_time is not None:
-                emit(w, gt, last_bid, last_ask,
+        for w in sorted(open_w):
+            if w + res_ms > wm:
+                break
+            c = open_w.pop(w)
+            if c[7]:
+                emit(w, c[0], c[1], c[2], c[3], c[4], c[5], c[6], True)
+            elif last_time is not None:
+                emit(w, w + res_ms - 1, last_bid, last_ask,
                      last_ask, last_ask, last_bid, last_bid, False)
             else:
                 # no live close ever seen: batch semantics keep the gap
                 # row's 0.0 prices (complete_candles leaves close as-is)
-                emit(w, gt, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, False)
-
-        for w in sorted(open_w):
-            if w + res_ms > wm:
-                break
-            # interior gaps since the previous emitted window (per-key
-            # mode only — in marker mode every active window has an entry)
-            if interior_gaps and next_w is not None:
-                g = next_w
-                while g < w:
-                    if last_time is not None:
-                        gt = g + res_ms - 1
-                        emit(g, gt, last_bid, last_ask,
-                             last_ask, last_ask, last_bid, last_bid, False)
-                    g += res_ms
-            c = open_w.pop(w)
-            if c[7]:
-                emit(w, c[0], c[1], c[2], c[3], c[4], c[5], c[6], True)
-            else:
-                emit_gap(w)
+                emit(w, w + res_ms - 1, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, False)
 
         # 3. persist remaining open windows + cursor; arm an event-time
         #    timeout at the oldest open window's end so the no-data final
@@ -266,7 +249,9 @@ def streaming_complete_candles(ticks: DataFrame,
             pdf[c] = pd.to_datetime(pdf[c], unit="ms", utc=True).dt.tz_localize(None)
         yield pdf
 
-    return (ticks
+    markers = _window_markers(ticks, universe, res_ms)
+    return (ticks.withColumn("is_marker", F.lit(False))
+            .unionByName(markers)
             .withWatermark("event_time", watermark)
             .groupBy("key")
             .applyInPandasWithState(
@@ -320,28 +305,3 @@ def _window_markers(ticks: DataFrame, universe: list[str],
         F.lit(False).alias("is_live"),
         F.lit(True).alias("is_marker"),
     )
-
-
-def streaming_complete_candles_global(ticks: DataFrame,
-                                      universe: list[str],
-                                      resolution: str = "120 seconds",
-                                      watermark: str = "0 seconds") -> DataFrame:
-    """Complete candles with GLOBAL gap-fill parity: a key absent from a
-    window gets a gap candle whenever any OTHER instrument ticked there —
-    including leading windows (before the key's first tick: 0.0-price gap
-    candles, matching batch ``gap_fill``) and trailing windows (after its
-    last tick: carry-forward gap candles).
-
-    ``universe`` is the instrument universe (the reference's work-packet
-    config constant, S3) — a static list, mirroring the batch operator's
-    broadcast ``instruments`` frame.
-
-    Shape: tick stream → window-activity markers fan-out (stateless,
-    candle-sized) → union → one keyed stateful operator. One shuffle on
-    key, same as the per-key variant.
-    """
-    res_ms = _resolution_ms(resolution)
-    markers = _window_markers(ticks, universe, res_ms)
-    full = ticks.withColumn("is_marker", F.lit(False)).unionByName(markers)
-    return streaming_complete_candles(full, resolution, watermark,
-                                      interior_gaps=False)

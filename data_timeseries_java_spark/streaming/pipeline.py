@@ -1,5 +1,6 @@
 """End-to-end streaming FX pipeline: ticks → complete candles (keyed
-state) → log returns → incremental sliding-window pairwise correlation.
+state, gap-filled over the instrument universe) → log returns →
+incremental sliding-window pairwise correlation.
 
 Correlation is a second aggregation over the candle stream; instead of
 fighting Spark's one-stateful-operator-per-query rule, the correlation
@@ -17,20 +18,15 @@ standard production pattern for "aggregate of an aggregate" streams:
 3. results land log-structured: each batch writes its recomputed
    windows to ONE ``batch_id``-keyed partition (overwrite → idempotent
    retries). The batch's TOUCH CLAIM rides in the same write as marker
-   rows (``key1 IS NULL``, one per recomputed window):
-   :func:`read_streaming_correlations` resolves
+   rows (``key1 IS NULL`` plus ``w_start_ms``, one per recomputed
+   window): :func:`read_streaming_correlations` resolves
    latest-TOUCHING-batch-per-window from the markers, which is what
    lets an empty recompute (late data dropped every pair of a window
    below ``min_corr``) supersede the stale rows instead of silently
-   resurrecting them. A per-slide partitioned store was measured
-   15-19s/micro-batch at sf0.1 — ~1,100 tiny directories rewritten per
-   trigger, pure filesystem cost; the log layout writes one directory
-   and cut the trigger to a 3.5s median (5.3x). A first marker design
-   wrote a separate ``touched/`` sidecar per batch — measured at
-   ANOTHER ~3.5s/trigger (a whole extra Spark job + parquet commit for
-   a handful of longs); in-band markers put the claim in the write
-   that already happens, restoring the 3.7s median, and work on remote
-   stores where a driver-side sidecar listing would not.
+   resurrecting them. One directory per batch, not one per slide: a
+   per-slide partitioned store rewrote ~1,100 tiny directories per
+   trigger at sf0.1 (15-19s/micro-batch); the log layout cut the
+   trigger to a 3.5s median.
    :func:`compact_correlation_store` periodically folds the log into
    one superseding batch so the read-time resolve stays bounded.
 
@@ -52,13 +48,10 @@ from data_timeseries_java_spark.operators import (
 )
 from data_timeseries_java_spark.streaming.candles_stream import (
     streaming_complete_candles,
-    streaming_complete_candles_global,
 )
 
-# Above this many touched windows, per-trigger membership filters use a
-# broadcast left-semi join instead of a literal IN — the list itself
-# stays a tiny driver-side long array either way.
-_IN_LITERAL_MAX = 10_000
+# Guard on the per-trigger touched-window list; see streaming_correlations.
+_MAX_TOUCHED_WINDOWS = 250_000
 
 
 def _flat_candles_to_returns(candles: DataFrame) -> DataFrame:
@@ -77,8 +70,7 @@ def streaming_correlations(spark: SparkSession, ticks: DataFrame,
                            resolution: str = "120 seconds",
                            config: CorrelationConfig | None = None,
                            watermark: str = "0 seconds",
-                           universe: list[str] | None = None,
-                           max_windows_per_trigger: int = 250_000):
+                           *, universe: list[str]):
     """Start the full streaming pipeline; returns the StreamingQuery.
 
     Results land log-structured in ``{work_dir}/correlations`` keyed by
@@ -87,49 +79,33 @@ def streaming_correlations(spark: SparkSession, ticks: DataFrame,
     ``{work_dir}/returns``.
 
     ``universe``: the instrument universe (the reference's work-packet
-    config constant). When given, the candle stage runs in GLOBAL
-    gap-fill mode — a key gets gap candles only for windows some
-    instrument actually ticked in — which is the batch engine's
-    semantics on ANY feed. Without it the per-key mode fabricates gap
-    candles for a key's own skipped windows, which matches batch only
-    on feeds where every window is globally active (dense demo data);
-    on sparse feeds it inflates the candle/return stream with windows
-    batch never emits. Pass the universe for batch parity on sparse
-    data.
+    config constant) that drives the candle stage's gap-fill — see
+    :func:`streaming_complete_candles`. With it the stream's output
+    equals the batch engine's on the same ticks, on dense and sparse
+    feeds alike.
 
-    ``max_windows_per_trigger`` bounds the per-trigger driver-side
-    touched-window list: it is structurally bounded by
-    (batch time span / slide) + window/slide, but a mis-set slide
-    (seconds where minutes were meant, a 60-180x inflation) would
-    silently blow the list up — fail loudly instead. The default
-    allows legitimate decade-replay triggers (the round-12 streaming
-    outlier audit tripped the old 10k limit at the 10x volume decade,
-    where each availableNow trigger legitimately spans ~37 days =
-    ~10.8k five-minute slides) while still catching the mis-set-slide
-    arithmetic at any realistic replay size. Membership filtering
-    switches from a literal IN to a broadcast semi-join above
-    ``_IN_LITERAL_MAX`` windows so the PLAN stays small either way —
-    only the driver-side list (8 bytes/window) and the marker rows
-    scale with the count.
+    A trigger that touches more than ``_MAX_TOUCHED_WINDOWS`` sliding
+    windows fails the query with ``ValueError``: the touched-window
+    list becomes a literal IN predicate in the recompute plan. The
+    count is bounded by (batch time span / slide) + window/slide, so a
+    legitimate decade replay (~10.8k five-minute slides per 37-day
+    trigger) fits far below the cap, while a mis-set slide (seconds
+    where minutes were meant, a 60-180x inflation) fails loudly
+    instead of building a huge plan.
     """
     cfg = config or CorrelationConfig()
     returns_path = f"{work_dir}/returns"
     corr_path = f"{work_dir}/correlations"
-    if universe is not None:
-        candles = streaming_complete_candles_global(ticks, universe,
-                                                    resolution, watermark)
-    else:
-        candles = streaming_complete_candles(ticks, resolution, watermark)
+    candles = streaming_complete_candles(ticks, universe, resolution,
+                                         watermark)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         rets = _flat_candles_to_returns(batch_df).cache()
         try:
             # The slides this batch touches — a tiny driver-side list
-            # (bounded by windows-per-trigger, not by history;
-            # collecting it lets every downstream filter be a literal
-            # predicate instead of a join against a recomputed subtree).
-            # Empty list == empty batch: this doubles as the emptiness
-            # probe, so no separate isEmpty() job runs.
+            # (bounded by windows-per-trigger, not by history). Empty
+            # list == empty batch: this doubles as the emptiness probe,
+            # so no separate isEmpty() job runs.
             wins = sorted(r[0] for r in
                           (rets.select(F.window("time", cfg.window,
                                                 cfg.slide).alias("w"))
@@ -138,10 +114,10 @@ def streaming_correlations(spark: SparkSession, ticks: DataFrame,
                            .distinct().collect()))
             if not wins:
                 return
-            if len(wins) > max_windows_per_trigger:
+            if len(wins) > _MAX_TOUCHED_WINDOWS:
                 raise ValueError(
                     f"batch {batch_id} touches {len(wins)} sliding "
-                    f"windows (> {max_windows_per_trigger}); check the "
+                    f"windows (> {_MAX_TOUCHED_WINDOWS}); check the "
                     f"slide duration — this list becomes a literal "
                     f"IN-predicate and must stay small")
             # foreachBatch is at-least-once: a batch re-executed after a
@@ -163,24 +139,15 @@ def streaming_correlations(spark: SparkSession, ticks: DataFrame,
         # any touched slide), then (2) exact per-row membership via the
         # row's own sliding windows. Rows in a touched window feed ALL
         # their windows, so neighbor windows appear with partial input
-        # — the post-agg w_start_ms filter drops those.
+        # — the post-agg membership filter drops those. Membership is a
+        # literal IN: Catalyst pushes it below the correlation
+        # aggregation and the pair self-join, so neighbor windows' pairs
+        # are never computed (a broadcast left-semi join cannot be
+        # pushed there and measured 1.7x slower per recompute).
         lo, hi = wins[0], wins[-1]
-        # Membership mechanism scales with the list: a literal IN
-        # (InSet) below _IN_LITERAL_MAX, a broadcast LEFT SEMI join
-        # above it — an 800 KB-of-longs literal in the plan is where
-        # plan serialization starts costing more than the tiny
-        # broadcast (round-12 streaming audit, 10x decade).
-        wins_df = None
-        if len(wins) > _IN_LITERAL_MAX:
-            wins_df = spark.createDataFrame(
-                [(int(w),) for w in wins], "w_member_ms bigint")
 
         def touched(df_with_ms: DataFrame) -> DataFrame:
-            if wins_df is None:
-                return df_with_ms.where(F.col("w_start_ms").isin(wins))
-            return df_with_ms.join(
-                F.broadcast(wins_df),
-                F.col("w_start_ms") == F.col("w_member_ms"), "left_semi")
+            return df_with_ms.where(F.col("w_start_ms").isin(wins))
 
         all_rets = (spark.read
                     .option("basePath", returns_path)
@@ -202,17 +169,13 @@ def streaming_correlations(spark: SparkSession, ticks: DataFrame,
         corr = pairwise_correlations(in_affected, cfg, cache_input=False)
         affected = touched(corr.withColumn("w_start_ms",
                                            F.unix_millis("window_start")))
-        # Log-structured store: ONE directory per batch (vs one per
-        # touched slide — ~1,100 dirs/trigger measured at sf0.1, 15-19s
-        # of pure filesystem churn). Latest TOUCHING batch wins per
-        # window at read time (read_streaming_correlations) — the
-        # marker rows unioned below (key1 IS NULL, one per touched
-        # window) are the authority on which batch that is, so a
-        # recompute that emits ZERO rows for a window (late data pushed
-        # every pair under min_corr) still supersedes the stale rows.
-        # In-band markers, NOT a separate sidecar write: a second tiny
-        # parquet job per trigger measured ~3.5s of pure job/commit
-        # overhead at sf0.1 (doubling the trigger).
+        # ONE directory per batch (a per-slide layout rewrote ~1,100
+        # directories per trigger at sf0.1). The marker rows unioned
+        # below (key1 IS NULL, one per touched window) are this batch's
+        # touch claim: read_streaming_correlations serves each window
+        # from its latest touching batch, so a recompute that emits
+        # ZERO rows for a window (late data pushed every pair under
+        # min_corr) still supersedes the stale rows.
         markers = (spark.createDataFrame([(int(w),) for w in wins],
                                          "w_start_ms bigint")
                    .select(*[F.col("w_start_ms") if f.name == "w_start_ms"
@@ -248,36 +211,13 @@ def read_streaming_correlations(spark: SparkSession,
     The marker set is O(batches x windows-per-trigger) — broadcast into
     the join, so the store side stays a single pruned parquet scan. On
     Delta/Iceberg this read-time resolve disappears into
-    MERGE-maintained tables. Two legacy layouts still resolve: a
-    ``touched/`` parquet sidecar (the first marker design — an extra
-    ~3.5s write job per trigger, since removed), and marker-less
-    stores, which fall back to max-batch-per-window over the data rows
-    (documented min_corr staleness caveat applies there). A MIXED
-    store — a pre-migration run resumed under the in-band code, so the
-    sidecar covers old batches and in-band markers cover new ones — is
-    resolved by UNIONING both claim sources (max batch_id per window
-    across sidecar + markers); short-circuiting on sidecar presence
-    would silently drop every post-resume batch's rows and serve stale
-    superseded rows, and compaction would make that loss permanent.
+    MERGE-maintained tables.
     """
-    import os
-
     corr_path = f"{work_dir}/correlations"
-    touched_path = f"{work_dir}/touched"
     df = spark.read.option("basePath", corr_path).parquet(corr_path)
     data = df.where(F.col("key1").isNotNull())
-    marks = df.where(F.col("key1").isNull()).select("w_start_ms", "batch_id")
-    if os.path.isdir(touched_path):          # legacy/mixed sidecar store
-        marks = marks.unionByName(
-            spark.read.option("basePath", touched_path)
-            .parquet(touched_path).select("w_start_ms", "batch_id"))
-    if marks.limit(1).count() == 0:          # pre-marker store
-        from pyspark.sql import Window
-        latest = F.max("batch_id").over(Window.partitionBy("w_start_ms"))
-        return (data.withColumn("_latest", latest)
-                .where(F.col("batch_id") == F.col("_latest"))
-                .drop("batch_id", "_latest"))
-    touched = (marks.groupBy("w_start_ms")
+    touched = (df.where(F.col("key1").isNull())
+               .groupBy("w_start_ms")
                .agg(F.max("batch_id").alias("batch_id")))
     return (data.join(F.broadcast(touched), ["w_start_ms", "batch_id"])
             .select([c for c in df.columns if c != "batch_id"]))
@@ -303,9 +243,7 @@ def compact_correlation_store(spark: SparkSession, work_dir: str) -> dict:
     marker row for every window any folded batch touched, so a window
     whose latest state was an empty recompute stays empty after
     compaction (its stale rows are physically gone and its touch claim
-    survives). A legacy ``touched/`` sidecar, if present, is folded
-    into the compacted batch's markers and removed — compaction
-    migrates old stores to the in-band layout.
+    survives).
 
     Local filesystem only: the directory shuffle goes through
     ``os``/``shutil``, which would silently no-op (or worse) on an
@@ -325,37 +263,28 @@ def compact_correlation_store(spark: SparkSession, work_dir: str) -> dict:
             f"compaction (OPTIMIZE/rewrite_data_files) on remote stores")
     local_dir = work_dir[len("file://"):] if m else work_dir
     corr_path = f"{local_dir}/correlations"
-    touched_path = f"{local_dir}/touched"
     batches = sorted(d for d in os.listdir(corr_path)
                      if d.startswith("batch_id="))
-    # No batches => nothing to fold (even if a legacy touched/ sidecar
-    # is present — reading the empty correlations dir would fail with
-    # unable-to-infer-schema); one batch with no sidecar is already
+    # No batches => nothing to fold (reading the empty correlations dir
+    # would fail with unable-to-infer-schema); one batch is already
     # compact.
-    if not batches or (len(batches) == 1 and not os.path.isdir(touched_path)):
+    if len(batches) <= 1:
         return {"batches_before": len(batches), "batches_after": len(batches),
                 "rows": None}
     snapshot = read_streaming_correlations(spark, local_dir)
     store = (spark.read.option("basePath", corr_path).parquet(corr_path))
     all_touched = (store.where(F.col("key1").isNull())
-                   .select("w_start_ms"))
-    if os.path.isdir(touched_path):          # fold the legacy sidecar in
-        all_touched = all_touched.unionByName(
-            spark.read.option("basePath", touched_path)
-            .parquet(touched_path).select("w_start_ms"))
-    all_touched = all_touched.distinct()
+                   .select("w_start_ms").distinct())
     dtypes = {f.name: f.dataType for f in snapshot.schema.fields}
     markers = all_touched.select(
         *[F.col("w_start_ms") if c == "w_start_ms"
           else F.lit(None).cast(dtypes[c]).alias(c)
           for c in snapshot.columns])
-    new_id = max((int(b.split("=", 1)[1]) for b in batches), default=0) + 1
+    new_id = max(int(b.split("=", 1)[1]) for b in batches) + 1
     out_dir = f"{corr_path}/batch_id={new_id}"
     snapshot.unionByName(markers).write.mode("overwrite").parquet(out_dir)
     rows = (spark.read.parquet(out_dir)
             .where(F.col("key1").isNotNull()).count())
-    if os.path.isdir(touched_path):
-        shutil.rmtree(touched_path, ignore_errors=True)
     for b in batches:
         shutil.rmtree(os.path.join(corr_path, b), ignore_errors=True)
     return {"batches_before": len(batches), "batches_after": 1, "rows": rows}

@@ -14,7 +14,7 @@ import time as _time
 import pytest
 from pyspark.sql import functions as F
 
-from data_timeseries_java_spark.fixtures import demo_tick_rows
+from data_timeseries_java_spark.fixtures import DEMO_KEYS, demo_tick_rows
 from data_timeseries_java_spark.operators import (
     complete_candles,
     gap_fill,
@@ -88,7 +88,8 @@ def test_bus_stream_candles_match_batch(spark, bus_capture_dir):
     ticks — the reference's TS-1..TS-5 demo goldens transitively."""
     src = replay_bus_capture(spark, bus_capture_dir + "/f*",
                              max_files_per_trigger=1)
-    out = streaming_complete_candles(src, "120 seconds").select(
+    out = streaming_complete_candles(
+        src, DEMO_KEYS + ["ZZ-SENTINEL"], "120 seconds").select(
         "key", "window_start", "open_ask", "close_ask", "is_live")
     q = (out.writeStream.format("memory").queryName("bus_candles")
          .outputMode("append").trigger(availableNow=True).start())

@@ -9,7 +9,7 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
-from data_timeseries_java_spark.fixtures import demo_tick_rows
+from data_timeseries_java_spark.fixtures import DEMO_KEYS, demo_tick_rows
 from data_timeseries_java_spark.operators import complete_candles, ohlc_candles
 from data_timeseries_java_spark.schemas import TICK_SCHEMA
 from data_timeseries_java_spark.streaming import (
@@ -97,7 +97,8 @@ def test_streaming_carry_forward_matches_batch(spark, tick_dir):
     )
     stream = _run_stream(
         spark, tick_dir,
-        lambda s: streaming_complete_candles(s, "120 seconds").select(
+        lambda s: streaming_complete_candles(
+            s, DEMO_KEYS + ["ZZ-SENTINEL"], "120 seconds").select(
             "key", "window_start", "open_ask", "close_ask"),
         "stream_complete")
     b = {tuple(r) for r in batch.collect()}
@@ -143,11 +144,8 @@ def test_streaming_global_gapfill_matches_batch(spark, sparse_tick_dir):
     """Leading/trailing global gaps: key B must get gap candles in
     windows where only A ticked — before B's first tick (0.0-price) and
     after its last (carry-forward) — exactly matching the batch
-    pipeline. Closes the per-key variant's documented divergence."""
+    pipeline."""
     from data_timeseries_java_spark.operators import gap_fill
-    from data_timeseries_java_spark.streaming.candles_stream import (
-        streaming_complete_candles_global,
-    )
 
     src_batch = (spark.read.schema(TICK_SCHEMA)
                  .parquet(f"{sparse_tick_dir}/f*")
@@ -163,7 +161,7 @@ def test_streaming_global_gapfill_matches_batch(spark, sparse_tick_dir):
     )
     stream = _run_stream(
         spark, sparse_tick_dir,
-        lambda s: streaming_complete_candles_global(
+        lambda s: streaming_complete_candles(
             s, ["A", "B"], "120 seconds").select(
             "key", "window_start", "is_live",
             "open_ask", "close_ask",
@@ -184,9 +182,6 @@ def test_streaming_global_gapfill_skips_empty_windows(spark, tmp_path):
     from datetime import datetime, timezone
 
     from data_timeseries_java_spark.operators import gap_fill
-    from data_timeseries_java_spark.streaming.candles_stream import (
-        streaming_complete_candles_global,
-    )
 
     d = str(tmp_path)
     t = lambda m, s=0: datetime(2016, 5, 1, 0, m, s, tzinfo=timezone.utc)
@@ -207,7 +202,7 @@ def test_streaming_global_gapfill_skips_empty_windows(spark, tmp_path):
 
     src = (spark.readStream.schema(TICK_SCHEMA)
            .option("maxFilesPerTrigger", 1).parquet(f"{d}/h*"))
-    out = streaming_complete_candles_global(
+    out = streaming_complete_candles(
         src, ["A", "B"], "120 seconds").select(
         "key", "window_start", "is_live",
         "open_ask", "close_ask")
@@ -230,6 +225,77 @@ def test_streaming_global_gapfill_skips_empty_windows(spark, tmp_path):
     assert s == b
     # 2 observed windows x 2 keys; nothing for the empty windows 1-2
     assert len(s) == 4
+
+
+@pytest.mark.parametrize("swap", [False, True])
+def test_streaming_close_tie_matches_batch(spark, tmp_path, swap):
+    """Two live ticks of one key in the same millisecond: the close goes
+    to the higher bid (window 0), then to the higher ask (window 1) —
+    batch's max(struct(t_ms, is_live, tick)) order — whichever file
+    delivers the winning tick first."""
+    import glob as _glob
+    import os as _os
+    import time as _t
+    from datetime import datetime, timezone
+
+    from data_timeseries_java_spark.operators.candles import candles_pipeline
+
+    t = lambda m, s=0, us=0: datetime(2016, 5, 1, 0, m, s, us,
+                                      tzinfo=timezone.utc)
+    lo_bid = ("K", t(1, 30, 123_000), 1.20, 1.21, True)
+    hi_bid = ("K", t(1, 30, 123_000), 1.30, 1.25, True)
+    hi_ask = ("K", t(3, 0), 1.40, 1.50, True)
+    lo_ask = ("K", t(3, 0), 1.40, 1.45, True)
+    first = [("K", t(0, 10), 1.00, 1.10, True), lo_bid, hi_ask]
+    second = [hi_bid, lo_ask, ("K", t(4, 10), 1.60, 1.70, True)]
+    if swap:
+        first = [first[0], hi_bid, lo_ask]
+        second = [lo_bid, hi_ask, second[2]]
+    sentinel = [("ZZ-SENTINEL", datetime(2016, 6, 1, tzinfo=timezone.utc),
+                 1.0, 1.0, True)]
+    d = str(tmp_path)
+    base = _t.time() - 1000
+    for i, rows in enumerate([first, second, sentinel]):
+        spark.createDataFrame(rows, TICK_SCHEMA).coalesce(1).write.mode(
+            "overwrite").parquet(f"{d}/f{i}")
+        for p in _glob.glob(f"{d}/f{i}/*"):
+            _os.utime(p, (base + i * 10, base + i * 10))
+
+    # watermark delay covers the whole feed, so the second file's ticks
+    # are never late; the sentinel flushes every window
+    src = (spark.readStream.schema(TICK_SCHEMA)
+           .option("maxFilesPerTrigger", 1).parquet(f"{d}/f*"))
+    out = streaming_complete_candles(
+        src, ["K", "ZZ-SENTINEL"], "120 seconds",
+        watermark="10 minutes").select(
+        "key", "window_start", "is_live", "open_bid", "open_ask",
+        "close_time", "close_bid", "close_ask")
+    name = f"stream_close_tie_{int(swap)}"
+    q = (out.writeStream.format("memory").queryName(name)
+         .outputMode("append").trigger(availableNow=True).start())
+    q.awaitTermination(120)
+    stream = spark.table(name).where(F.col("key") == "K")
+
+    ticks = spark.createDataFrame(first + second, TICK_SCHEMA)
+    batch = candles_pipeline(ticks, ticks.select("key").distinct(),
+                             "120 seconds").select(
+        "key", "window_start", "is_live",
+        F.col("open.bid"), F.col("open.ask"),
+        F.col("close.time"), F.col("close.bid"), F.col("close.ask"))
+    b = {tuple(r) for r in batch.collect()}
+    s = {tuple(r) for r in stream.collect()}
+    assert s == b
+    closes = {r.window_start.minute: (r.close_bid, r.close_ask)
+              for r in stream.collect()}
+    assert closes == {0: (1.30, 1.25), 2: (1.40, 1.50), 4: (1.60, 1.70)}
+
+
+def test_streaming_complete_candles_rejects_string_universe(spark, tmp_path):
+    """A stale positional call (resolution where the universe goes) must
+    fail loudly instead of treating the string's characters as keys."""
+    src = spark.readStream.schema(TICK_SCHEMA).parquet(str(tmp_path))
+    with pytest.raises(TypeError, match="universe"):
+        streaming_complete_candles(src, "120 seconds")
 
 
 def test_multimodal_operators_compose_with_streams(spark, tmp_path):

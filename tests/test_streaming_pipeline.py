@@ -8,6 +8,7 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
+from data_timeseries_java_spark.fixtures import DEMO_KEYS
 from data_timeseries_java_spark.operators import (
     CorrelationConfig,
     log_returns,
@@ -22,6 +23,7 @@ from data_timeseries_java_spark.streaming.pipeline import (
 
 CFG = CorrelationConfig(window="600 seconds", slide="300 seconds",
                         min_corr=0.0, propagate_nan=True)
+DEMO_UNIVERSE = DEMO_KEYS + ["ZZ-SENTINEL"]
 
 
 def test_streaming_correlations_match_batch(spark):
@@ -49,7 +51,8 @@ def test_streaming_correlations_match_batch(spark):
         src = (spark.readStream.schema(TICK_SCHEMA)
                .option("maxFilesPerTrigger", 1).parquet(f"{d}/in/f*"))
         q = streaming_correlations(spark, src, f"{d}/out",
-                                   resolution="120 seconds", config=CFG)
+                                   resolution="120 seconds", config=CFG,
+                                   universe=DEMO_UNIVERSE)
         q.awaitTermination(180)
 
         got = (read_streaming_correlations(spark, f"{d}/out")
@@ -72,12 +75,11 @@ def test_streaming_correlations_match_batch(spark):
 
 def test_streaming_correlations_sparse_feed_matches_batch(spark):
     """Batch parity on a SPARSE feed (globally-dead windows between two
-    active clusters): with the universe passed, the candle stage runs in
-    global gap-fill mode and emits nothing for windows no instrument
-    ticked in — the per-key mode would fabricate candles (and thus
-    correlation windows) across the dead zone. Found by driving the
-    pipeline over the (sparse) events table: per-key mode produced 49x
-    the batch row count."""
+    active clusters): the universe-driven candle stage emits nothing for
+    windows no instrument ticked in, so no candles (and thus no
+    correlation windows) appear across the dead zone. Gap-filling each
+    key's own skipped windows instead produced 49x the batch row count
+    on the (sparse) events table."""
     import random
     from datetime import datetime, timedelta, timezone
 
@@ -181,98 +183,9 @@ def test_empty_recompute_supersedes_stale_rows(spark):
         shutil.rmtree(d, ignore_errors=True)
 
 
-def test_legacy_sidecar_store_resolves_and_migrates(spark):
-    """Stores written by the interim touched/-sidecar layout still
-    resolve (sidecar authority), and compaction migrates them to the
-    in-band marker layout, removing the sidecar directory."""
-    import os
-    from datetime import datetime, timezone
-
-    from data_timeseries_java_spark.streaming.pipeline import (
-        compact_correlation_store,
-    )
-
-    t = datetime(2016, 1, 4, 9, 0, tzinfo=timezone.utc)
-    d = tempfile.mkdtemp(prefix="spipe_legacy_")
-    try:
-        def write_batch(bid, rows, wins):
-            spark.createDataFrame(rows, _CORR_SCHEMA).write.mode(
-                "overwrite").parquet(f"{d}/correlations/batch_id={bid}")
-            spark.createDataFrame([(w,) for w in wins],
-                                  "w_start_ms long").write.mode(
-                "overwrite").parquet(f"{d}/touched/batch_id={bid}")
-
-        row = lambda w: (t, t, "A", "B", 0.9, 5, 5, False, w)
-        write_batch(0, [row(1000), row(2000)], [1000, 2000])
-        write_batch(1, [], [1000])           # sidecar-only tombstone
-
-        got = read_streaming_correlations(spark, d)
-        assert {r.w_start_ms for r in got.collect()} == {2000}
-
-        stats = compact_correlation_store(spark, d)
-        assert stats["batches_after"] == 1 and stats["rows"] == 1
-        assert not os.path.isdir(f"{d}/touched")   # migrated
-        after = read_streaming_correlations(spark, d)
-        assert {r.w_start_ms for r in after.collect()} == {2000}
-        marks = (spark.read.option("basePath", f"{d}/correlations")
-                 .parquet(f"{d}/correlations").where("key1 IS NULL"))
-        assert {r.w_start_ms for r in marks.collect()} == {1000, 2000}
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-
-
-def test_mixed_sidecar_and_inband_store_resolves(spark):
-    """A pre-migration store (touched/ sidecar) RESUMED under the
-    in-band-marker code: old batches' claims live only in the sidecar,
-    new batches' claims only in-band. The resolve must union both claim
-    sources (max batch_id per window across sidecar + markers) — a
-    sidecar-presence short-circuit would drop every post-resume batch's
-    rows and serve the superseded rows, and compaction would then make
-    the loss permanent."""
-    import os
-    from datetime import datetime, timezone
-
-    from data_timeseries_java_spark.streaming.pipeline import (
-        compact_correlation_store,
-    )
-
-    t = datetime(2016, 1, 4, 9, 0, tzinfo=timezone.utc)
-    d = tempfile.mkdtemp(prefix="spipe_mixed_")
-    try:
-        row = lambda w, c: (t, t, "A", "B", c, 5, 5, False, w)
-        # batch 0: legacy layout — data rows + sidecar claim, no markers
-        spark.createDataFrame([row(1000, 0.5), row(2000, 0.5)],
-                              _CORR_SCHEMA).write.mode(
-            "overwrite").parquet(f"{d}/correlations/batch_id=0")
-        spark.createDataFrame([(1000,), (2000,)],
-                              "w_start_ms long").write.mode(
-            "overwrite").parquet(f"{d}/touched/batch_id=0")
-        # batch 1: post-resume layout — in-band markers, sidecar untouched.
-        # Recomputes window 1000 with a NEW value and tombstones 2000.
-        marks = [(None, None, None, None, None, None, None, None, w)
-                 for w in (1000, 2000)]
-        spark.createDataFrame([row(1000, 0.9)] + marks,
-                              _CORR_SCHEMA).write.mode(
-            "overwrite").parquet(f"{d}/correlations/batch_id=1")
-
-        got = {(r.w_start_ms, r.value)
-               for r in read_streaming_correlations(spark, d).collect()}
-        assert got == {(1000, 0.9)}
-
-        stats = compact_correlation_store(spark, d)
-        assert stats["batches_after"] == 1 and stats["rows"] == 1
-        assert not os.path.isdir(f"{d}/touched")
-        after = {(r.w_start_ms, r.value)
-                 for r in read_streaming_correlations(spark, d).collect()}
-        assert after == {(1000, 0.9)}
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-
-
-def test_compact_empty_store_with_sidecar_is_noop(spark):
-    """Zero batch directories but a touched/ sidecar present: compaction
-    must early-return instead of failing on the unreadable empty
-    correlations directory."""
+def test_compact_empty_store_is_noop(spark):
+    """Zero batch directories: compaction must early-return instead of
+    failing on the unreadable empty correlations directory."""
     import os
 
     from data_timeseries_java_spark.streaming.pipeline import (
@@ -282,11 +195,48 @@ def test_compact_empty_store_with_sidecar_is_noop(spark):
     d = tempfile.mkdtemp(prefix="spipe_empty_")
     try:
         os.makedirs(f"{d}/correlations")
-        spark.createDataFrame([(1000,)], "w_start_ms long").write.mode(
-            "overwrite").parquet(f"{d}/touched/batch_id=0")
         stats = compact_correlation_store(spark, d)
         assert stats == {"batches_before": 0, "batches_after": 0,
                          "rows": None}
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+
+
+def test_touched_window_cap_fails_the_query(spark, monkeypatch):
+    """A trigger touching more sliding windows than the cap fails the
+    query with ValueError, surfaced through ``q.exception()`` — a
+    mis-set slide must not silently build a huge window list."""
+    import glob
+    import os
+    import time
+    from datetime import datetime, timezone
+
+    from data_timeseries_java_spark.fixtures import demo_tick_rows
+    from data_timeseries_java_spark.streaming import pipeline
+
+    monkeypatch.setattr(pipeline, "_MAX_TOUCHED_WINDOWS", 1)
+    d = tempfile.mkdtemp(prefix="spipe_cap_")
+    try:
+        sentinel = [("ZZ-SENTINEL", datetime(2016, 6, 1, tzinfo=timezone.utc),
+                     1.0, 1.0, True)]
+        base = time.time() - 1000
+        # the demo feed, then the sentinel that finalizes its candles:
+        # their returns touch more than one 600 s / 300 s window
+        for i, rows in enumerate([demo_tick_rows(), sentinel]):
+            spark.createDataFrame(rows, TICK_SCHEMA).coalesce(1).write.mode(
+                "overwrite").parquet(f"{d}/in/f{i}")
+            for p in glob.glob(f"{d}/in/f{i}/*"):
+                os.utime(p, (base + i * 10, base + i * 10))
+        src = (spark.readStream.schema(TICK_SCHEMA)
+               .option("maxFilesPerTrigger", 1).parquet(f"{d}/in/f*"))
+        q = streaming_correlations(spark, src, f"{d}/out",
+                                   resolution="120 seconds", config=CFG,
+                                   universe=DEMO_UNIVERSE)
+        with pytest.raises(Exception):
+            q.awaitTermination(180)
+        err = q.exception()
+        assert err is not None
+        assert "ValueError" in str(err) and "sliding windows" in str(err)
     finally:
         shutil.rmtree(d, ignore_errors=True)
 
@@ -346,7 +296,9 @@ def test_long_run_store_stays_bounded_under_compaction(spark):
                    .option("maxFilesPerTrigger", 1)
                    .parquet(f"{d}/in/*"))
             q = streaming_correlations(spark, src, f"{d}/out",
-                                       resolution="120 seconds", config=CFG)
+                                       resolution="120 seconds", config=CFG,
+                                       universe=["EUR/USD", "USD/JPY",
+                                                 "ZZ-SENTINEL"])
             q.awaitTermination(180)
             n_dirs = len([x for x in os.listdir(f"{d}/out/correlations")
                           if x.startswith("batch_id=")])
@@ -405,7 +357,8 @@ def test_compact_correlation_store(spark):
         src = (spark.readStream.schema(TICK_SCHEMA)
                .option("maxFilesPerTrigger", 1).parquet(f"{d}/in/f*"))
         q = streaming_correlations(spark, src, f"{d}/out",
-                                   resolution="120 seconds", config=CFG)
+                                   resolution="120 seconds", config=CFG,
+                                   universe=DEMO_UNIVERSE)
         q.awaitTermination(180)
 
         before = {tuple(r) for r in

@@ -35,7 +35,7 @@ def test_carry_forward_state_survives_restart(spark, tmp_path):
     def start():
         src = (spark.readStream.schema(TICK_SCHEMA)
                .option("maxFilesPerTrigger", 1).parquet(f"{d}/in/f*"))
-        out = streaming_complete_candles(src, "120 seconds")
+        out = streaming_complete_candles(src, ["K"], "120 seconds")
         return (out.writeStream.format("parquet")
                 .option("path", f"{d}/out")
                 .option("checkpointLocation", f"{d}/ckpt")
